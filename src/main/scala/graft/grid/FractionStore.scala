@@ -43,6 +43,18 @@ final case class FracRowBytes(
   *  - sparsity: an absent (frac, chunk) row is simply no row (jgrid3.py:22-23);
   *    reads materialize nodata/NULL at the pixel view (P9).
   *
+  * One writer owns this layout: every path that writes fraction rows
+  * (write, writePrepartitioned, compact, the ST1 append, the ST3 chunk
+  * repair and the U1 pipelines) goes through [[writeChunks]]. It sets
+  * the overwrite policy per write, never through the session conf: a
+  * whole-store overwrite replaces every time chunk, a tail or chunk
+  * rewrite replaces only the time chunks it writes. It writes the data
+  * first and the header second, so a header is saved only once its data
+  * is on disk: a failed write to a new store leaves no header, a failed
+  * append leaves the previous time axis, and a retry converges. (A
+  * failed whole-store overwrite can still leave the old header over
+  * partly deleted data; making that atomic needs versioned commits.)
+  *
   * Fraction row schema:
   *   frac_num int, time_chunk int, frac_x int, frac_y int,
   *   x0 int, y0 int, t0 int, w int, h int, nd int, data binary
@@ -65,25 +77,43 @@ object FractionStore {
 
   // ---- write (SNK1/SNK2) ----------------------------------------------
 
-  /** Write fraction rows (schema above). Repartitions to one shuffle
-    * partition per time chunk and sorts by frac_num so each parquet
-    * row-group covers a contiguous spatial band (stats-based pruning).
-    */
+  /** Write fraction rows (schema above) in the store layout, then the
+    * header. `mode = "overwrite"` replaces the whole store. */
   def write(spark: SparkSession, header: GridHeader, fracRows: DataFrame,
-            root: String, mode: String = "overwrite"): Unit = {
-    header.save(spark, root)
-    // range-partition by (time_chunk, frac_num): each output file covers a
-    // contiguous frac band WITHIN one time_chunk dir, so (a) writes and
-    // subsequent reads parallelize across files (repartition(time_chunk)
-    // alone serialized a whole chunk's data into one file = one task —
-    // measured 30x slower at tile scale), and (b) per-file frac_num
-    // min/max stats still prune rect windows.
-    fracRows
-      .repartitionByRange(col("time_chunk"), col("frac_num"))
+            root: String, mode: String = "overwrite"): Unit =
+    writeChunks(fracRows, root, Some(header), mode)
+
+  /** The one chunk writer (see the layout notes above). Range-partitions
+    * by (time_chunk, frac_num) unless the caller's rows are
+    * `prepartitioned`: each output file covers a contiguous frac band
+    * WITHIN one time_chunk dir, so (a) writes and later reads
+    * parallelize across files (repartition(time_chunk) alone serialized
+    * a whole chunk's data into one file = one task — measured 30x
+    * slower at tile scale), and (b) per-file frac_num min/max stats
+    * still prune rect windows. The sort names BOTH keys: the write
+    * requires time_chunk order, and a frac_num-only sort does not give
+    * it, so Spark would add its own Sort [time_chunk] and drop ours.
+    *
+    * `dynamicOverwrite` replaces only the time chunks present in `rows`
+    * (tail and chunk rewrites); otherwise an overwrite replaces the whole
+    * store. `header`, when given, is saved after the data.
+    */
+  private[graft] def writeChunks(rows: DataFrame, root: String,
+                                 header: Option[GridHeader],
+                                 mode: String = "overwrite",
+                                 dynamicOverwrite: Boolean = false,
+                                 prepartitioned: Boolean = false): Unit = {
+    val ranged =
+      if (prepartitioned) rows
+      else rows.repartitionByRange(col("time_chunk"), col("frac_num"))
+    ranged
       .sortWithinPartitions(col("time_chunk"), col("frac_num"))
       .write.mode(mode)
+      .option("partitionOverwriteMode",
+        if (dynamicOverwrite) "dynamic" else "static")
       .partitionBy("time_chunk")
       .parquet(dataPath(root))
+    header.foreach(_.save(rows.sparkSession, root))
   }
 
   /** Compact a store's data files back into the canonical layout
@@ -97,7 +127,7 @@ object FractionStore {
     * time_chunk)); only the file population needs rewriting, so this
     * is a pure readwrite of the selected partitions: localCheckpoint
     * first (the rewrite reads the partitions it deletes — same hazard
-    * as IncrementalAppend), then a dynamic-partition-overwrite write.
+    * as IncrementalAppend), then a rewrite of just those time chunks.
     *
     * `timeChunks` is the unit-of-work knob: compacting a 100 TB store
     * in one call would checkpoint the whole store, so production
@@ -108,26 +138,15 @@ object FractionStore {
     */
   def compact(spark: SparkSession, root: String,
               timeChunks: Option[Seq[Int]] = None): (Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(dataPath(root))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // count only the partitions being rewritten: a bounded maintenance
     // batch over a huge store must not pay a full-store recursive LIST
     // (2 per call x N batches on an object store) just for the report
-    def countFiles(): Long = {
-      val dirs = timeChunks match {
-        case Some(cs) => cs.map(c =>
-          new org.apache.hadoop.fs.Path(dataPath(root), s"time_chunk=$c"))
-        case None => Seq(new org.apache.hadoop.fs.Path(dataPath(root)))
-      }
-      var n = 0L
-      dirs.filter(fs.exists).foreach { d =>
-        val it = fs.listFiles(d, true)
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-      }
-      n
+    val dirs = timeChunks match {
+      case Some(cs) => cs.map(c => s"${dataPath(root)}/time_chunk=$c")
+      case None => Seq(dataPath(root))
     }
+    def countFiles(): Long =
+      graft.ops.IndexVersions.countParquetFiles(spark, dirs)
     val before = countFiles()
     val selected = timeChunks match {
       case Some(cs) => fractions(spark, root)
@@ -135,25 +154,10 @@ object FractionStore {
       case None => fractions(spark, root)
     }
     val rows = selected.localCheckpoint()
-    val prev = spark.conf.getOption(
-      "spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      rows.repartitionByRange(col("time_chunk"), col("frac_num"))
-        .sortWithinPartitions(col("time_chunk"), col("frac_num"))
-        .write.mode("overwrite").partitionBy("time_chunk")
-        .parquet(dataPath(root))
-    } finally {
-      // unpersist in the finally: a failed rewrite must not pin the
-      // checkpointed batch on executors for the session's lifetime
-      rows.unpersist()
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    // unpersist in the finally: a failed rewrite must not pin the
+    // checkpointed batch on executors for the session's lifetime
+    try writeChunks(rows, root, None, dynamicOverwrite = true)
+    finally rows.unpersist()
     (before, countFiles())
   }
 
@@ -162,14 +166,8 @@ object FractionStore {
     * shuffle, keeps the same on-disk layout. */
   def writePrepartitioned(spark: SparkSession, header: GridHeader,
                           fracRows: DataFrame, root: String,
-                          mode: String = "overwrite"): Unit = {
-    header.save(spark, root)
-    fracRows
-      .sortWithinPartitions(col("time_chunk"), col("frac_num"))
-      .write.mode(mode)
-      .partitionBy("time_chunk")
-      .parquet(dataPath(root))
-  }
+                          mode: String = "overwrite"): Unit =
+    writeChunks(fracRows, root, Some(header), mode, prepartitioned = true)
 
   /** Chunk a pixel-level DataFrame (x, y, t, value) into fraction rows —
     * the write_all path (jgrid3.py:441-457). Pixels absent from `pixels`
@@ -351,36 +349,44 @@ object FractionStore {
             col("data").as(s"data_$i")),
           Seq("frac_num", "time_chunk"), joinType)
     }
+    explodeAligned(joined, stores.map(_._1), masks)
+      .filter(col("x") >= xFrom && col("x") < xTo &&
+        col("y") >= yFrom && col("y") < yTo &&
+        col("t") >= tFrom && col("t") < tTo)
+  }
+
+  /** Chunk rows joined on the chunk key, with payload columns
+    * `data_0..data_{n-1}` of grids `headers`, to the pixel view
+    * (x, y, t, value_0..value_{n-1}). `masks(i)` turns grid i's nodata
+    * into NULL. */
+  private def explodeAligned(joined: DataFrame, headers: Seq[GridHeader],
+                             masks: Seq[Boolean]): DataFrame = {
     // materialize every unpacked array in ONE projection below the
     // generator — Catalyst does not CSE into generators, and element_at
     // over an inlined unpack would re-decode the chunk per pixel
     val unpacked = joined.select(
       Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.map(i =>
-          unpack(stores(i)._1, col(s"data_$i")).as(s"arr_$i")): _*)
+        headers.indices.map(i =>
+          unpack(headers(i), col(s"data_$i")).as(s"arr_$i")): _*)
     val exploded = unpacked.select(
       Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.drop(1).map(i => col(s"arr_$i")) :+
+        headers.indices.drop(1).map(i => col(s"arr_$i")) :+
         posexplode(col("arr_0")).as(Seq("pos", "value_0")): _*)
     val withCoords = exploded
       .withColumn("pix", expr("pos div nd").cast("int"))
       .withColumn("x", col("x0") + col("pix") % col("w"))
       .withColumn("y", col("y0") + expr("pix div w").cast("int"))
       .withColumn("t", col("t0") + col("pos") % col("nd"))
-    val values = stores.indices.map { i =>
+    val values = headers.indices.map { i =>
       val raw = if (i == 0) col("value_0")
                 else element_at(col(s"arr_$i"), col("pos") + 1)
-      val h = stores(i)._1
+      val h = headers(i)
       val v = if (masks(i) && !h.nodata.isNaN)
         nullif(raw, lit(h.nodata).cast(elementType(h.dtype)))
       else raw
       v.as(s"value_$i")
     }
-    withCoords
-      .select(Seq(col("x"), col("y"), col("t")) ++ values: _*)
-      .filter(col("x") >= xFrom && col("x") < xTo &&
-        col("y") >= yFrom && col("y") < yTo &&
-        col("t") >= tFrom && col("t") < tTo)
+    withCoords.select(Seq(col("x"), col("y"), col("t")) ++ values: _*)
   }
 
   // ---- bucketed chunk tables (J2: zero-shuffle co-located joins) ------
@@ -443,31 +449,7 @@ object FractionStore {
             col("data").as(s"data_$i")),
           Seq("frac_num", "time_chunk"))
     }
-    // one projection materializes every unpacked array below the
-    // generator (same no-CSE-into-generators rule as loadAlignedSliceXY)
-    val unpacked = joined.select(
-      Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.map(i =>
-          unpack(stores(i)._1, col(s"data_$i")).as(s"arr_$i")): _*)
-    val exploded = unpacked.select(
-      Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.drop(1).map(i => col(s"arr_$i")) :+
-        posexplode(col("arr_0")).as(Seq("pos", "value_0")): _*)
-    val withCoords = exploded
-      .withColumn("pix", expr("pos div nd").cast("int"))
-      .withColumn("x", col("x0") + col("pix") % col("w"))
-      .withColumn("y", col("y0") + expr("pix div w").cast("int"))
-      .withColumn("t", col("t0") + col("pos") % col("nd"))
-    val values = stores.indices.map { i =>
-      val raw = if (i == 0) col("value_0")
-                else element_at(col(s"arr_$i"), col("pos") + 1)
-      val h = stores(i)._1
-      val v = if (masks(i) && !h.nodata.isNaN)
-        nullif(raw, lit(h.nodata).cast(elementType(h.dtype)))
-      else raw
-      v.as(s"value_$i")
-    }
-    withCoords.select(Seq(col("x"), col("y"), col("t")) ++ values: _*)
+    explodeAligned(joined, stores.map(_._1), masks)
   }
 
   /** Lat/lng window load (P4, jgrid3.py:588-605): WGS84 rect -> grid xy

@@ -77,22 +77,17 @@ final class GridPipeline(
 
     val outDf = outRows.toDF()
 
-    output.save(spark, outputRoot)
     // persist so the count action and the write share one execution (the
     // reference avoids double work by writing inside the mapper and
     // returning only filenames — spark.py:199-205)
     outDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = outDf.count()
-      if (n > 0) {
-        // incremental runs append new chunks; forceAll rewrites the store
-        // (reference overwrites fraction files in place)
-        outDf.repartitionByRange(col("time_chunk"), col("frac_num"))
-          .sortWithinPartitions(col("frac_num"))
-          .write.mode(if (forceAll) "overwrite" else "append")
-          .partitionBy("time_chunk")
-          .parquet(FractionStore.dataPath(outputRoot))
-      }
+      // incremental runs append new chunks; forceAll rewrites the store
+      // (reference overwrites fraction files in place)
+      if (n > 0) FractionStore.writeChunks(outDf, outputRoot, Some(output),
+        if (forceAll) "overwrite" else "append")
+      else output.save(spark, outputRoot)
       n
     } finally outDf.unpersist()
   }
@@ -228,24 +223,21 @@ final class GridMultiPipeline(
       }
 
     val outDf = outRows.toDF()
-    outputs.foreach { case (h, root) => h.save(spark, root) }
     // one kernel execution feeds every store write + the count
     outDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = outDf.count()
-      if (n > 0) outputs.zipWithIndex.foreach { case ((_, root), i) =>
+      if (n > 0) outputs.zipWithIndex.foreach { case ((h, root), i) =>
         val one = outDf.select(col("frac_num"), col("time_chunk"),
           col("frac_x"), col("frac_y"), col("x0"), col("y0"), col("t0"),
           col("w"), col("h"), col("nd"), col(s"data_$i").as("data"))
         val fresh =
           if (forceAll) one
           else one.join(perOutputDone(i), key, "left_anti")
-        fresh.repartitionByRange(col("time_chunk"), col("frac_num"))
-          .sortWithinPartitions(col("frac_num"))
-          .write.mode(if (forceAll) "overwrite" else "append")
-          .partitionBy("time_chunk")
-          .parquet(FractionStore.dataPath(root))
+        FractionStore.writeChunks(fresh, root, Some(h),
+          if (forceAll) "overwrite" else "append")
       }
+      else outputs.foreach { case (h, root) => h.save(spark, root) }
       n
     } finally {
       outDf.unpersist()

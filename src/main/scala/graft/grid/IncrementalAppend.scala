@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *  - chunking invariance: create(all) == create(prefix) + append(rest);
   *  - idempotence: appending already-present dates is a no-op;
   *  - the header's timestamps are the authoritative axis (dates CSV
-  *    analog), extended atomically with the data write.
+  *    analog), extended only after the data write succeeds, so a failed
+  *    append leaves the old axis and a retry converges.
   *
   * Scale: the rewrite touches only time chunks >= floor(n0/fracNDates) —
   * dynamic partition overwrite on the time_chunk partition column; all
@@ -72,21 +73,8 @@ object IncrementalAppend {
     // to overwrite — materialize before the destructive write so no task
     // can recompute against deleted files
     val rows = FractionStore.fromPixels(spark, h1, window).localCheckpoint()
-    // dynamic partition overwrite: replace ONLY the affected time chunks
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      rows.repartitionByRange(col("time_chunk"), col("frac_num"))
-        .sortWithinPartitions(col("frac_num"))
-        .write.mode("overwrite").partitionBy("time_chunk")
-        .parquet(FractionStore.dataPath(root))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-    h1.save(spark, root)
+    // replace ONLY the affected time chunks
+    FractionStore.writeChunks(rows, root, Some(h1), dynamicOverwrite = true)
     h1
   }
 }

@@ -73,6 +73,22 @@ object IndexVersions {
     fs.exists(p)
   }
 
+  /** Parquet data files under `dirs`, recursively; a missing directory
+    * counts zero. The file-population figure the compactions report. */
+  def countParquetFiles(spark: SparkSession, dirs: Seq[String]): Long =
+    dirs.map { d =>
+      val p = new Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var n = 0L
+      if (fs.exists(p)) {
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+        }
+      }
+      n
+    }.sum
+
   private def markerDir(dir: String) = new Path(dir, "_versions")
 
   private def listVersions(fs: FileSystem, dir: String): Seq[Int] = {

@@ -426,23 +426,11 @@ object Similarity {
                                      cells: Option[Seq[Int]],
                                      afterSnapshot: () => Unit): (Long, Long) = {
     val root = IndexVersions.resolve(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(at: String): Long = {
-      val dirs = cells match {
-        case Some(cs) => cs.map(c =>
-          new org.apache.hadoop.fs.Path(s"$at/assignments/cell=$c"))
-        case None => Seq(new org.apache.hadoop.fs.Path(s"$at/assignments"))
-      }
-      var n = 0L
-      dirs.filter(fs.exists).foreach { d =>
-        val it = fs.listFiles(d, true)
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-      }
-      n
-    }
+    def countFiles(at: String): Long =
+      IndexVersions.countParquetFiles(spark, cells match {
+        case Some(cs) => cs.map(c => s"$at/assignments/cell=$c")
+        case None => Seq(s"$at/assignments")
+      })
     val before = countFiles(root)
     val base = spark.read.parquet(s"$root/assignments")
     cells match {
@@ -502,24 +490,13 @@ object Similarity {
         val selected = base
           .filter(col("cell").isin(cs.map(Integer.valueOf): _*))
           .localCheckpoint()
-        val prev = spark.conf.getOption(
-          "spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-          "dynamic")
         try {
           selected.repartition(col("cell"))
             .sortWithinPartitions(col("corpus_id"))
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$root/assignments")
-        } finally {
-          selected.unpersist()
-          prev match {
-            case Some(v) =>
-              spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None =>
-              spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-        }
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("cell").parquet(s"$root/assignments")
+        } finally selected.unpersist()
         (before, countFiles(root))
     }
   }

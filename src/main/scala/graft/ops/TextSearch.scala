@@ -210,25 +210,12 @@ object TextSearch {
       dir: String, buckets: Option[Seq[Int]],
       afterSnapshot: () => Unit): (Long, Long) = {
     val root = IndexVersions.resolve(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(at: String): Long = {
-      val dirs = buckets match {
-        case Some(bs) => bs.flatMap(b => Seq(
-          new org.apache.hadoop.fs.Path(s"$at/postings/term_bucket=$b"),
-          new org.apache.hadoop.fs.Path(s"$at/dfs/term_bucket=$b")))
-        case None => Seq(new org.apache.hadoop.fs.Path(s"$at/postings"),
-          new org.apache.hadoop.fs.Path(s"$at/dfs"))
-      }
-      var n = 0L
-      dirs.filter(fs.exists).foreach { d =>
-        val it = fs.listFiles(d, true)
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-      }
-      n
-    }
+    def countFiles(at: String): Long =
+      IndexVersions.countParquetFiles(spark, buckets match {
+        case Some(bs) => bs.flatMap(b =>
+          Seq(s"$at/postings/term_bucket=$b", s"$at/dfs/term_bucket=$b"))
+        case None => Seq(s"$at/postings", s"$at/dfs")
+      })
     val before = countFiles(root)
     buckets match {
       case None =>
@@ -310,28 +297,18 @@ object TextSearch {
           .groupBy(col("term_bucket"), col("term"))
           .agg(sum(col("df")).as("df"))
           .localCheckpoint()
-        val prev = spark.conf.getOption(
-          "spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-          "dynamic")
         try {
           posts.repartition(col("term_bucket"))
             .sortWithinPartitions(col("term"))
-            .write.mode("overwrite").partitionBy("term_bucket")
-            .parquet(s"$root/postings")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("term_bucket").parquet(s"$root/postings")
           dfs.repartition(col("term_bucket"))
             .sortWithinPartitions(col("term"))
-            .write.mode("overwrite").partitionBy("term_bucket")
-            .parquet(s"$root/dfs")
-        } finally {
-          posts.unpersist(); dfs.unpersist()
-          prev match {
-            case Some(v) =>
-              spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None =>
-              spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-        }
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("term_bucket").parquet(s"$root/dfs")
+        } finally { posts.unpersist(); dfs.unpersist() }
         (before, countFiles(root))
     }
   }
