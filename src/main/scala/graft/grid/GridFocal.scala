@@ -1,6 +1,6 @@
 package graft.grid
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A halo strip: the sliver of a source chunk that a NEIGHBORING chunk
@@ -20,36 +20,47 @@ final case class FocalPixel(
     mean_nbr: Option[Double], min_nbr: Option[Double],
     max_nbr: Option[Double])
 
-/** Focal (moving-window neighborhood) statistics over the fraction
-  * store — the raster-algebra "focal mean" / smoothing pass the
-  * reference leaves to numpy post-processing on collected slices
+/** Focal (moving-window neighborhood) operators over the fraction
+  * store — the raster-algebra "focal mean" / smoothing pass, weighted
+  * convolution and Horn terrain products the reference leaves to numpy
+  * post-processing on collected slices
   * (doc/notebooks/ndvi_anomaly.ipynb-style array ops), here as one
-  * distributed operator.
+  * distributed operator each.
   *
   * Scale design (the 100 TB shape): a focal window only crosses chunk
-  * borders by `radius` pixels, so the operator does HALO EXCHANGE at
-  * chunk granularity instead of a pixel-level 9-way self-join:
+  * borders by `radius` pixels, so every operator runs ONE halo exchange
+  * at chunk granularity ([[haloExchange]]) instead of a pixel-level
+  * 9-way self-join:
   *
   *  - every chunk emits up to 8 boundary strips (≤ radius wide, sliced
   *    byte-for-byte from the packed payload — no decode, native dtype)
-  *    keyed to the neighbor that needs them. Shuffled halo bytes are
+  *    keyed to the neighbor that needs them. Halo bytes are
   *    perimeter-sized: ~ 4·r·(w+h)/(w·h) of the data (≈ 8 % at 50×50
   *    chunks, r=1) — vs the naive pixel-view offset-explode join, which
   *    shuffles (2r+1)² = 9× the FULL cube;
-  *  - chunks group on their own key (ONE payload shuffle; over a
-  *    standing bucketed worldgrid use [[focalStatsBucketed]], whose
-  *    plan moves only the strips), meet their halos in a cogroup, and
-  *    each group decodes once and runs the stencil over a padded
-  *    plane — per-chunk imperative logic, the mapGroups niche;
+  *  - the strips aggregate (`collect_list`) to one row per TARGET
+  *    (frac_num, time_chunk) and LEFT-join the chunk rows. While the
+  *    gathered strips fit the broadcast threshold the join broadcasts
+  *    them and the chunk payloads never move; past it the join is a
+  *    sort-merge join that shuffles the chunk rows once — except over a
+  *    table bucketed on (frac_num, time_chunk)
+  *    ([[FractionStore.writeBucketed]], [[focalStatsBucketed]]), whose
+  *    scan already has the join's partitioning, so only the strips move
+  *    (FocalBucketedSpec pins zero Exchange under the chunk scan);
+  *  - each joined row decodes its core payload and its strips once,
+  *    builds a NaN-padded plane per in-range date and hands it to the
+  *    operator's stencil — per-chunk imperative logic, the flatMap
+  *    niche. Each stencil keeps its own statement-form per-pixel loops;
+  *    the exchange calls it once per (chunk, date), never per pixel;
   *  - absent neighbors (sparse store, or beyond the grid edge) simply
   *    contribute no strip: their pixels count as invalid, the same
   *    nodata semantics the pixel view gives absent chunks.
   *
-  * Emits one row per pixel of every PRESENT chunk, valid-neighbor count
-  * and mean/min/max over the valid pixels of the in-bounds
-  * (2r+1)×(2r+1) window (center included). Integer-valued doubles sum
-  * exactly in any order, so `mean_nbr` is engine-reproducible
-  * (sum/count, one double divide).
+  * [[focalStats]] emits one row per pixel of every PRESENT chunk,
+  * valid-neighbor count and mean/min/max over the valid pixels of the
+  * in-bounds (2r+1)×(2r+1) window (center included). Integer-valued
+  * doubles sum exactly in any order, so `mean_nbr` is
+  * engine-reproducible (sum/count, one double divide).
   */
 object GridFocal {
 
@@ -65,151 +76,110 @@ object GridFocal {
     focalStatsOnChunks(spark, header, fracs, radius, tFrom, tTo, maskNodata)
   }
 
-  /** Same, over an explicit chunk DataFrame (fraction-row schema).
-    * NOTE: the typed groupByKey here always exchanges — for a
-    * zero-chunk-movement plan over a bucketed table use
-    * [[focalStatsBucketed]].
-    */
+  /** Same, over an explicit chunk DataFrame (fraction-row schema). */
   def focalStatsOnChunks(spark: SparkSession, header: GridHeader,
                          fracRows: DataFrame, radius: Int,
                          tFrom: Int, tTo: Int,
                          maskNodata: Boolean): DataFrame = {
     import spark.implicits._
-    require(radius >= 1 && radius <= math.min(header.fracWidth, header.fracHeight),
-      s"radius must be in [1, min(fracWidth, fracHeight)], got $radius")
-    val g = header.chunkGrid
-    val code = PayloadCodec.code(header.dtype)
-    val bpe = PayloadCodec.bytesPerElem(code)
-    val nodata = if (maskNodata) header.nodata else Double.NaN
     val r = radius
-
-    val chunks = fracRows.select("frac_num", "time_chunk", "frac_x", "frac_y",
-      "x0", "y0", "t0", "w", "h", "nd", "data").as[FracRowBytes]
-
-    val strips = haloStrips(chunks, g, r, bpe)
-
-    // 2. Chunks meet their halos; one decode per payload; stencil over
-    // a NaN-padded plane per date.
-    val tLo = tFrom; val tHi = tTo
-    chunks.groupByKey(c => (c.frac_x, c.frac_y, c.time_chunk))
-      .cogroup(strips.groupByKey(s => (s.frac_x, s.frac_y, s.time_chunk))) {
-        (_, cs, ss) =>
-          if (!cs.hasNext) Iterator.empty
-          else {
-            val c = cs.next()
-            // decode once per payload (strips would otherwise re-decode
-            // per date inside the t loop)
-            val halos = ss.map(s =>
-              (s, PayloadCodec.decodeDouble(s.data, code))).toArray
-            stencilOverChunk(c, halos, code, r, nodata, tLo, tHi)
-          }
-      }.toDF()
-  }
-
-  /** The mean/min/max stencil body shared by the cogroup
-    * ([[focalStatsOnChunks]]) and bucketed ([[focalStatsBucketed]])
-    * paths: decode the core payload once, then for every in-range date
-    * run the (2r+1)² valid-cell window over the NaN-padded plane. */
-  private def stencilOverChunk(c: FracRowBytes,
-                               halos: Array[(HaloStrip, Array[Double])],
-                               code: Int, r: Int, nodata: Double,
-                               tLo: Int, tHi: Int): Iterator[FocalPixel] = {
-    val core = PayloadCodec.decodeDouble(c.data, code)
-    val pw = c.w + 2 * r
-    val ph = c.h + 2 * r
-    val out = scala.collection.mutable.ArrayBuffer.empty[FocalPixel]
-    var ti = 0
-    while (ti < c.nd) {
-      val t = c.t0 + ti
-      if (t >= tLo && t < tHi) {
-        val plane = paddedPlane(c, ti, core, halos, r, pw, ph, nodata)
-        var yy = 0
-        while (yy < c.h) {
-          var xx = 0
-          while (xx < c.w) {
-            var cnt = 0L; var sum = 0.0
-            var mn = Double.MaxValue; var mx = Double.MinValue
-            var wy = yy
-            while (wy <= yy + 2 * r) {
-              var wx = xx
-              while (wx <= xx + 2 * r) {
-                val v = plane(wy * pw + wx)
-                if (!v.isNaN) {
-                  cnt += 1; sum += v
-                  if (v < mn) mn = v
-                  if (v > mx) mx = v
-                }
-                wx += 1
+    val nodata = if (maskNodata) header.nodata else Double.NaN
+    haloExchange[FocalPixel](header, fracRows, r, nodata, tFrom,
+        tTo) { (c, t, plane) =>
+      val pw = c.w + 2 * r
+      val out =
+        new scala.collection.mutable.ArrayBuffer[FocalPixel](c.w * c.h)
+      var yy = 0
+      while (yy < c.h) {
+        var xx = 0
+        while (xx < c.w) {
+          var cnt = 0L; var sum = 0.0
+          var mn = Double.MaxValue; var mx = Double.MinValue
+          var wy = yy
+          while (wy <= yy + 2 * r) {
+            var wx = xx
+            while (wx <= xx + 2 * r) {
+              val v = plane(wy * pw + wx)
+              if (!v.isNaN) {
+                cnt += 1; sum += v
+                if (v < mn) mn = v
+                if (v > mx) mx = v
               }
-              wy += 1
+              wx += 1
             }
-            out += (if (cnt > 0)
-              FocalPixel(c.x0 + xx, c.y0 + yy, t, cnt,
-                Some(sum / cnt), Some(mn), Some(mx))
-            else
-              FocalPixel(c.x0 + xx, c.y0 + yy, t, 0L,
-                None, None, None))
-            xx += 1
+            wy += 1
           }
-          yy += 1
+          out += (if (cnt > 0)
+            FocalPixel(c.x0 + xx, c.y0 + yy, t, cnt,
+              Some(sum / cnt), Some(mn), Some(mx))
+          else
+            FocalPixel(c.x0 + xx, c.y0 + yy, t, 0L,
+              None, None, None))
+          xx += 1
         }
+        yy += 1
       }
-      ti += 1
-    }
-    out.iterator
+      out.iterator
+    }.toDF()
   }
 
   /** Focal stats over a BUCKETED chunk table (written by
     * [[FractionStore.writeBucketed]] on (frac_num, time_chunk)): the
-    * chunk payloads never move — strips aggregate to their target
-    * chunk key and JOIN the bucketed scan, so the only Exchange in the
-    * plan is the perimeter-sized strip side (FocalBucketedSpec pins
-    * zero Exchange under the chunk scan). This is the 100 TB shape for
-    * repeated focal passes over a standing worldgrid; the typed-cogroup
-    * path ([[focalStats]]) pays one chunk-payload shuffle instead.
+    * same halo exchange as [[focalStats]], whose join keys match the
+    * bucketing, so the chunk payloads never move — the 100 TB shape for
+    * repeated focal passes over a standing worldgrid.
     */
   def focalStatsBucketed(spark: SparkSession, header: GridHeader,
                          table: String, radius: Int, tFrom: Int, tTo: Int,
-                         maskNodata: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val r = radius
+                         maskNodata: Boolean = true): DataFrame =
+    focalStatsOnChunks(spark, header, spark.table(table), radius, tFrom, tTo,
+      maskNodata)
+
+  private val chunkCols = Seq("frac_num", "time_chunk", "frac_x", "frac_y",
+    "x0", "y0", "t0", "w", "h", "nd", "data")
+
+  /** The one halo exchange every focal operator runs: strips built once
+    * and gathered to their target (frac_num, time_chunk), left-joined to
+    * the chunk rows (`fracRows`, fraction-row schema), core payload and
+    * strips decoded once per joined row, then `kernel` called once per
+    * (chunk, date in [tFrom, tTo)) with the chunk, the date and its
+    * NaN-padded (w+2r)×(h+2r) plane ([[paddedPlane]]). `nodata` is the
+    * value masked to NaN (NaN masks nothing). */
+  private def haloExchange[T: Encoder](header: GridHeader, fracRows: DataFrame,
+                                       r: Int, nodata: Double,
+                                       tFrom: Int, tTo: Int)(
+      kernel: (FracRowBytes, Int, Array[Double]) => Iterator[T]): Dataset[T] = {
     require(r >= 1 && r <= math.min(header.fracWidth, header.fracHeight),
       s"radius must be in [1, min(fracWidth, fracHeight)], got $r")
+    val spark = fracRows.sparkSession
+    import spark.implicits._
     val g = header.chunkGrid
     val code = PayloadCodec.code(header.dtype)
-    val bpe = PayloadCodec.bytesPerElem(code)
-    val nodata = if (maskNodata) header.nodata else Double.NaN
-    val cols = Seq("frac_num", "time_chunk", "frac_x", "frac_y",
-      "x0", "y0", "t0", "w", "h", "nd", "data")
-    val chunks = spark.table(table).select(cols.map(col): _*)
-    val typed = chunks.as[FracRowBytes]
-    // strips keyed by the TARGET chunk's (frac_num, time_chunk), then
-    // pre-aggregated so the bucketed join is one row per chunk
-    val strips = haloStrips(typed, g, r, bpe)
-      .withColumn("frac_num",
-        col("frac_y") * lit(g.numFracsX) + col("frac_x"))
+    val chunks = fracRows.select(chunkCols.map(col): _*)
+    val strips = haloStrips(chunks.as[FracRowBytes], g, r,
+        PayloadCodec.bytesPerElem(code))
+      .select((col("frac_y") * lit(g.numFracsX) + col("frac_x")).as("frac_num"),
+        col("time_chunk"), struct(col("*")).as("s"))
       .groupBy(col("frac_num"), col("time_chunk"))
-      .agg(collect_list(struct(col("sx0"), col("sy0"), col("t0"),
-        col("sw"), col("sh"), col("nd"), col("data"))).as("strips"))
-    val joined = chunks.join(strips, Seq("frac_num", "time_chunk"), "left")
-      .select(struct(cols.map(col): _*).as("c"), col("strips"))
-      .as[(FracRowBytes, Option[Seq[(Int, Int, Int, Int, Int, Int, Array[Byte])]])]
-    val tLo = tFrom; val tHi = tTo
-    joined.flatMap { case (c, stripsOpt) =>
-      val halos = stripsOpt.getOrElse(Seq.empty).map { s =>
-        (HaloStrip(0, 0, c.time_chunk, s._1, s._2, s._3, s._4, s._5, s._6,
-          s._7), PayloadCodec.decodeDouble(s._7, code))
-      }.toArray
-      stencilOverChunk(c, halos, code, r, nodata, tLo, tHi)
-    }.toDF()
+      .agg(collect_list(col("s")).as("strips"))
+    chunks.join(strips, Seq("frac_num", "time_chunk"), "left")
+      .select(struct(chunkCols.map(col): _*).as("c"), col("strips"))
+      .as[(FracRowBytes, Option[Seq[HaloStrip]])]
+      .flatMap { case (c, stripsOpt) =>
+        val core = PayloadCodec.decodeDouble(c.data, code)
+        val halos = stripsOpt.getOrElse(Nil).map(s =>
+          (s, PayloadCodec.decodeDouble(s.data, code))).toArray
+        Iterator.range(math.max(tFrom, c.t0), math.min(tTo, c.t0 + c.nd))
+          .flatMap(t =>
+            kernel(c, t, paddedPlane(c, t, core, halos, r, nodata)))
+      }
   }
 
   /** Emit each chunk's boundary strips to its 8 neighbors — pure byte
     * slicing of the packed C-order [y][x][t] payload (a row segment of
     * nd elements per (y, x) is contiguous; no decode on the emit side). */
-  private def haloStrips(chunks: org.apache.spark.sql.Dataset[FracRowBytes],
-                         g: ChunkGrid, r: Int,
-                         bpe: Int): org.apache.spark.sql.Dataset[HaloStrip] = {
+  private def haloStrips(chunks: Dataset[FracRowBytes], g: ChunkGrid, r: Int,
+                         bpe: Int): Dataset[HaloStrip] = {
     import chunks.sparkSession.implicits._
     chunks.flatMap { c =>
       def slice(xa: Int, xb: Int, ya: Int, yb: Int): Array[Byte] = {
@@ -244,15 +214,15 @@ object GridFocal {
     }
   }
 
-  /** Assemble the NaN-padded (w+2r)×(h+2r) plane for date index `ti`:
-    * core values in the middle, halo strips in the ring, NaN = absent /
+  /** Assemble the NaN-padded (w+2r)×(h+2r) plane for date `t`: core
+    * values in the middle, halo strips in the ring, NaN = absent /
     * out-of-grid / nodata-masked. */
-  private def paddedPlane(c: FracRowBytes, ti: Int, core: Array[Double],
+  private def paddedPlane(c: FracRowBytes, t: Int, core: Array[Double],
                           halos: Array[(HaloStrip, Array[Double])],
-                          r: Int, pw: Int, ph: Int,
-                          nodata: Double): Array[Double] = {
-    val t = c.t0 + ti
-    val plane = Array.fill(pw * ph)(Double.NaN)
+                          r: Int, nodata: Double): Array[Double] = {
+    val ti = t - c.t0
+    val pw = c.w + 2 * r
+    val plane = Array.fill(pw * (c.h + 2 * r))(Double.NaN)
     var i = 0
     val n = c.w * c.h
     while (i < n) {
@@ -308,79 +278,53 @@ object GridFocal {
     require(kh >= 3 && kh % 2 == 1 && kernel.forall(_.length == kh),
       s"kernel must be odd square >= 3x3, got ${kernel.map(_.length)}")
     val r = kh / 2
-    require(r <= math.min(header.fracWidth, header.fracHeight),
-      "radius exceeds chunk size")
     val kFlat = kernel.flatten.toArray
-    val g = header.chunkGrid
-    val code = PayloadCodec.code(header.dtype)
     val nodata = if (maskNodata) header.nodata else Double.NaN
     val fracRows = FractionStore.fractionsForWindow(spark, header, root,
       0, header.width, 0, header.height, tFrom, tTo)
-    val chunks = fracRows.select("frac_num", "time_chunk", "frac_x", "frac_y",
-      "x0", "y0", "t0", "w", "h", "nd", "data").as[FracRowBytes]
-    val strips = haloStrips(chunks, g, r, PayloadCodec.bytesPerElem(code))
-    val tLo = tFrom; val tHi = tTo
-    chunks.groupByKey(c => (c.frac_x, c.frac_y, c.time_chunk))
-      .cogroup(strips.groupByKey(s => (s.frac_x, s.frac_y, s.time_chunk))) {
-        (_, cs, ss) =>
-          if (!cs.hasNext) Iterator.empty
-          else {
-            val c = cs.next()
-            val halos = ss.map(s =>
-              (s, PayloadCodec.decodeDouble(s.data, code))).toArray
-            val core = PayloadCodec.decodeDouble(c.data, code)
-            val pw = c.w + 2 * r
-            val ph = c.h + 2 * r
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[(Int, Int, Int, Option[Double])]
-            var ti = 0
-            while (ti < c.nd) {
-              val t = c.t0 + ti
-              if (t >= tLo && t < tHi) {
-                val plane = paddedPlane(c, ti, core, halos, r, pw, ph, nodata)
-                var yy = 0
-                while (yy < c.h) {
-                  var xx = 0
-                  while (xx < c.w) {
-                    var num = 0.0; var den = 0.0
-                    var all = true
-                    var ki = 0
-                    var wy = yy
-                    while (wy <= yy + 2 * r) {
-                      var wx = xx
-                      while (wx <= xx + 2 * r) {
-                        val v = plane(wy * pw + wx)
-                        if (!v.isNaN) {
-                          num += kFlat(ki) * v; den += kFlat(ki)
-                        } else all = false
-                        ki += 1
-                        wx += 1
-                      }
-                      wy += 1
-                    }
-                    val res =
-                      if (renormalize) { if (den != 0.0) Some(num / den) else None }
-                      else if (all) Some(num)
-                      else None
-                    out += ((c.x0 + xx, c.y0 + yy, t, res))
-                    xx += 1
-                  }
-                  yy += 1
-                }
-              }
-              ti += 1
+    haloExchange[(Int, Int, Int, Option[Double])](header, fracRows, r, nodata,
+        tFrom, tTo) { (c, t, plane) =>
+      val pw = c.w + 2 * r
+      val out = new scala.collection.mutable.ArrayBuffer[
+        (Int, Int, Int, Option[Double])](c.w * c.h)
+      var yy = 0
+      while (yy < c.h) {
+        var xx = 0
+        while (xx < c.w) {
+          var num = 0.0; var den = 0.0
+          var all = true
+          var ki = 0
+          var wy = yy
+          while (wy <= yy + 2 * r) {
+            var wx = xx
+            while (wx <= xx + 2 * r) {
+              val v = plane(wy * pw + wx)
+              if (!v.isNaN) {
+                num += kFlat(ki) * v; den += kFlat(ki)
+              } else all = false
+              ki += 1
+              wx += 1
             }
-            out.iterator
+            wy += 1
           }
-      }.toDF("x", "y", "t", "conv")
+          val res =
+            if (renormalize) { if (den != 0.0) Some(num / den) else None }
+            else if (all) Some(num)
+            else None
+          out += ((c.x0 + xx, c.y0 + yy, t, res))
+          xx += 1
+        }
+        yy += 1
+      }
+      out.iterator
+    }.toDF("x", "y", "t", "conv")
   }
 
   /** Horn-method terrain derivatives — slope / aspect / hillshade, the
     * classic DEM raster products — over the same halo-exchange
     * machinery as [[focalStats]] (the reference leaves raster algebra
     * of this kind to numpy on collected slices; here it is one
-    * distributed pass whose only payload shuffle is chunk-keyed, with
-    * perimeter-sized halo strips).
+    * distributed pass).
     *
     * Per pixel, the 3x3 Horn gradients over cell sizes (gx, gy) from
     * the header geotransform:
@@ -406,12 +350,6 @@ object GridFocal {
                    azimuthDeg: Double = 315.0, altitudeDeg: Double = 45.0,
                    roundTo: Int = 3): DataFrame = {
     import spark.implicits._
-    val r = 1
-    require(math.min(header.fracWidth, header.fracHeight) >= 1,
-      "chunk too small for a 3x3 window")
-    val g = header.chunkGrid
-    val code = PayloadCodec.code(header.dtype)
-    val nodata = header.nodata
     val gx = header.geot(1)
     val gy = math.abs(header.geot(5))
     val hx = 8.0 * gx
@@ -424,82 +362,61 @@ object GridFocal {
     val degPerRad = 180.0 / math.Pi
     val fracRows = FractionStore.fractionsForWindow(spark, header, root,
       0, header.width, 0, header.height, tFrom, tTo)
-    val chunks = fracRows.select("frac_num", "time_chunk", "frac_x", "frac_y",
-      "x0", "y0", "t0", "w", "h", "nd", "data").as[FracRowBytes]
-    val strips = haloStrips(chunks, g, r, PayloadCodec.bytesPerElem(code))
-    val tLo = tFrom; val tHi = tTo
     val rnd = math.pow(10.0, roundTo)
-    chunks.groupByKey(c => (c.frac_x, c.frac_y, c.time_chunk))
-      .cogroup(strips.groupByKey(s => (s.frac_x, s.frac_y, s.time_chunk))) {
-        (_, cs, ss) =>
-          if (!cs.hasNext) Iterator.empty
-          else {
-            val c = cs.next()
-            val halos = ss.map(s =>
-              (s, PayloadCodec.decodeDouble(s.data, code))).toArray
-            val core = PayloadCodec.decodeDouble(c.data, code)
-            val pw = c.w + 2 * r
-            val ph = c.h + 2 * r
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[(Int, Int, Int, Double, Double, Double)]
-            var ti = 0
-            while (ti < c.nd) {
-              val t = c.t0 + ti
-              if (t >= tLo && t < tHi) {
-                val plane = paddedPlane(c, ti, core, halos, r, pw, ph, nodata)
-                var yy = 0
-                while (yy < c.h) {
-                  var xx = 0
-                  while (xx < c.w) {
-                    val va = plane(yy * pw + xx)
-                    val vb = plane(yy * pw + xx + 1)
-                    val vc = plane(yy * pw + xx + 2)
-                    val vd = plane((yy + 1) * pw + xx)
-                    val vf = plane((yy + 1) * pw + xx + 2)
-                    val vg = plane((yy + 2) * pw + xx)
-                    val vh = plane((yy + 2) * pw + xx + 1)
-                    val vi = plane((yy + 2) * pw + xx + 2)
-                    val ve = plane((yy + 1) * pw + xx + 1)
-                    if (!va.isNaN && !vb.isNaN && !vc.isNaN && !vd.isNaN &&
-                        !ve.isNaN && !vf.isNaN && !vg.isNaN && !vh.isNaN &&
-                        !vi.isNaN) {
-                      val dzdx = ((vc + 2 * vf + vi) - (va + 2 * vd + vg)) *
-                        zf / hx
-                      val dzdy = ((vg + 2 * vh + vi) - (va + 2 * vb + vc)) *
-                        zf / hy
-                      val srad = math.atan(
-                        math.sqrt(dzdx * dzdx + dzdy * dzdy))
-                      val arad0 = math.atan2(dzdy, -dzdx)
-                      val adeg0 = arad0 * degPerRad
-                      // ESRI aspect rule: two cases, not three — the
-                      // adeg0 < 0 input already lands in [90, 360) via
-                      // the same 90 - adeg0 formula
-                      val aspect =
-                        if (adeg0 > 90.0) 450.0 - adeg0
-                        else 90.0 - adeg0
-                      val arad = if (arad0 < 0) arad0 + 2.0 * math.Pi
-                        else arad0
-                      val lum = cosZen * math.cos(srad) +
-                        sinZen * math.sin(srad) * math.cos(azMath - arad)
-                      val hs = if (lum < 0) 0.0 else 255.0 * lum
-                      // half-up rounding (all three outputs are >= 0):
-                      // the same boundary rule as Spark's / DuckDB's
-                      // round(), unlike rint's half-even
-                      out += ((c.x0 + xx, c.y0 + yy, t,
-                        math.floor(srad * degPerRad * rnd + 0.5) / rnd,
-                        math.floor(aspect * rnd + 0.5) / rnd,
-                        math.floor(hs * rnd + 0.5) / rnd))
-                    }
-                    xx += 1
-                  }
-                  yy += 1
-                }
-              }
-              ti += 1
-            }
-            out.iterator
+    haloExchange[(Int, Int, Int, Double, Double, Double)](header, fracRows,
+        1, header.nodata, tFrom, tTo) { (c, t, plane) =>
+      val pw = c.w + 2
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Int, Int, Int, Double, Double, Double)]
+      var yy = 0
+      while (yy < c.h) {
+        var xx = 0
+        while (xx < c.w) {
+          val va = plane(yy * pw + xx)
+          val vb = plane(yy * pw + xx + 1)
+          val vc = plane(yy * pw + xx + 2)
+          val vd = plane((yy + 1) * pw + xx)
+          val vf = plane((yy + 1) * pw + xx + 2)
+          val vg = plane((yy + 2) * pw + xx)
+          val vh = plane((yy + 2) * pw + xx + 1)
+          val vi = plane((yy + 2) * pw + xx + 2)
+          val ve = plane((yy + 1) * pw + xx + 1)
+          if (!va.isNaN && !vb.isNaN && !vc.isNaN && !vd.isNaN &&
+              !ve.isNaN && !vf.isNaN && !vg.isNaN && !vh.isNaN &&
+              !vi.isNaN) {
+            val dzdx = ((vc + 2 * vf + vi) - (va + 2 * vd + vg)) *
+              zf / hx
+            val dzdy = ((vg + 2 * vh + vi) - (va + 2 * vb + vc)) *
+              zf / hy
+            val srad = math.atan(
+              math.sqrt(dzdx * dzdx + dzdy * dzdy))
+            val arad0 = math.atan2(dzdy, -dzdx)
+            val adeg0 = arad0 * degPerRad
+            // ESRI aspect rule: two cases, not three — the
+            // adeg0 < 0 input already lands in [90, 360) via
+            // the same 90 - adeg0 formula
+            val aspect =
+              if (adeg0 > 90.0) 450.0 - adeg0
+              else 90.0 - adeg0
+            val arad = if (arad0 < 0) arad0 + 2.0 * math.Pi
+              else arad0
+            val lum = cosZen * math.cos(srad) +
+              sinZen * math.sin(srad) * math.cos(azMath - arad)
+            val hs = if (lum < 0) 0.0 else 255.0 * lum
+            // half-up rounding (all three outputs are >= 0):
+            // the same boundary rule as Spark's / DuckDB's
+            // round(), unlike rint's half-even
+            out += ((c.x0 + xx, c.y0 + yy, t,
+              math.floor(srad * degPerRad * rnd + 0.5) / rnd,
+              math.floor(aspect * rnd + 0.5) / rnd,
+              math.floor(hs * rnd + 0.5) / rnd))
           }
-      }.toDF("x", "y", "t", "slope_deg", "aspect_deg", "hillshade")
+          xx += 1
+        }
+        yy += 1
+      }
+      out.iterator
+    }.toDF("x", "y", "t", "slope_deg", "aspect_deg", "hillshade")
   }
 
   /** The declarative baseline: pixel-view offset-explode self-

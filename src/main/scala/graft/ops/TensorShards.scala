@@ -369,9 +369,14 @@ object TensorShards {
     * A/B over a cached bins frame (sf0.1, capacity 512, 1.98M tokens):
     * decode-proper cpu 1.4-1.9s -> 0.38-0.54s, row multisets equal.
     * Still a pure projection + generators over the scan — ZERO
-    * exchanges (PlanAuditSpec pins it). A zero-length segment (cannot
-    * occur — encode emits no empty documents) generates no rows, which
-    * matches the old form: it never won the prefix-sum argmax.
+    * exchanges (PlanAuditSpec pins it). The decode is total: a bin
+    * whose seg_lens do not sum to its token count, or whose loss_mask
+    * length differs from it (a torn or malformed shard), raises an
+    * error instead of dropping the tail — one check per bin, held in a
+    * filter so column pruning above cannot remove it. A zero-length
+    * segment (cannot occur — encode emits no empty documents) generates
+    * no rows, which matches the old form: it never won the prefix-sum
+    * argmax.
     *
     * Output: (bin_id, pos, token_id, loss, seg_idx, seg_start,
     * seg_len). */
@@ -380,6 +385,13 @@ object TensorShards {
       .select(element_at(col("bin_id"), 1).as("bin_id"),
         col("token_ids"), col("loss_mask"),
         col("seg_starts"), col("seg_lens"))
+      .filter(expr(
+        "if(aggregate(seg_lens, 0L, (acc, x) -> acc + x) = size(token_ids) " +
+          "AND size(loss_mask) = size(token_ids), true, " +
+          "raise_error(format_string('tensor bin %d: seg_lens sum to %d " +
+          "but it has %d token_ids and %d loss_mask bits', bin_id, " +
+          "aggregate(seg_lens, 0L, (acc, x) -> acc + x), size(token_ids), " +
+          "size(loss_mask))))"))
       // offs[j] = tokens before segment j (0-based): prefix sums of
       // seg_lens, exclusive — array-bounded fold, pure codegen
       .withColumn("offs", expr(

@@ -221,4 +221,79 @@ class GridFocalSpec extends AnyFunSuite {
     // edge (1,0): 6 cells {0,1,2,1,2,3}
     assert(rows((1, 0)) == ((6L, 1.5, 0.0, 3.0)))
   }
+
+  /** The 40x20 float32 store in 10x10 chunks with chunk (1, 0) absent
+    * (the sparse-store case above), shared by the convolve and terrain
+    * sparse cases. */
+  private lazy val (sparseH, sparseRoot) = {
+    val h = GridHeader(name = "focal_sparse2", width = 40, height = 20,
+      fracWidth = 10, fracHeight = 10, fracNDates = 2, dtype = "float32",
+      srs = "wgs84", geot = Seq(0.0, 0.01, 0.0, 0.0, 0.0, -0.01),
+      timestampsMs = Seq(0L, 86400000L), nodata = -1.0)
+    val px = SyntheticGrid.pixelDf(spark, h,
+        (x, y, t) => ((x * 3 + y * 5 + t) % 11).cast("double"))
+      .filter(!(col("x").between(10, 19) && col("y").between(0, 9)))
+    val root = java.nio.file.Files.createTempDirectory("graft_focal_sp2")
+      .toString
+    FractionStore.write(spark, h, FractionStore.fromPixels(spark, h, px), root)
+    (h, root)
+  }
+
+  test("sparse store: convolve == declarative twin, absent chunk invalid") {
+    val smooth = GridFocal.focalConvolve(spark, sparseH, sparseRoot, gauss,
+      0, 2)
+    assert(smooth.filter(col("x").between(10, 19) && col("y").between(0, 9))
+      .count() == 0)
+    assertSame(smooth,
+      convolveNaive(sparseH, sparseRoot, gauss, 0, 2, renormalize = true))
+    assertSame(
+      GridFocal.focalConvolve(spark, sparseH, sparseRoot, sobelX, 0, 2,
+        renormalize = false),
+      convolveNaive(sparseH, sparseRoot, sobelX, 0, 2, renormalize = false))
+  }
+
+  test("5x5 kernel (radius 2, spanning chunk corners) == declarative twin") {
+    // asymmetric integer weights: a transposed or mirrored window would
+    // change the result
+    val k5 = Seq.tabulate(5, 5)((dy, dx) => (dy * 5 + dx + 1).toDouble)
+    assertSame(
+      GridFocal.focalConvolve(spark, tinyH, tinyRoot, k5, 4, 6),
+      convolveNaive(tinyH, tinyRoot, k5, 4, 6, renormalize = true))
+    assertSame(
+      GridFocal.focalConvolve(spark, tinyH, tinyRoot, k5, 4, 6,
+        renormalize = false),
+      convolveNaive(tinyH, tinyRoot, k5, 4, 6, renormalize = false))
+  }
+
+  test("terrain on a sparse store: no row whose window touches the " +
+    "absent chunk") {
+    val rows = GridFocal.focalTerrain(spark, sparseH, sparseRoot, 0, 2)
+      .collect()
+    // a center's 3x3 window touches chunk (1, 0) = x 10..19, y 0..9 iff
+    // the center lies in x 9..20, y -1..10
+    assert(!rows.exists(r => r.getInt(0) >= 9 && r.getInt(0) <= 20 &&
+      r.getInt(1) <= 10))
+    // every other interior center of both dates has a row (no nodata in
+    // this store): (38 * 18 - 12 * 10) * 2
+    assert(rows.length == (38 * 18 - 12 * 10) * 2)
+  }
+
+  test("a date range crossing a time-chunk boundary (tiny: fracNDates = 3)") {
+    // t in [1, 4) reads time chunk 0 (t 1, 2) and time chunk 1 (t 3)
+    val stats = GridFocal.focalStats(spark, tinyH, tinyRoot, 1, 1, 4)
+    assert(stats.select("t").distinct().count() == 3)
+    assertSame(stats,
+      GridFocal.focalStatsNaive(spark, tinyH, tinyRoot, 1, 1, 4))
+    assertSame(
+      GridFocal.focalConvolve(spark, tinyH, tinyRoot, gauss, 1, 4),
+      convolveNaive(tinyH, tinyRoot, gauss, 1, 4, renormalize = true))
+    // terrain has no declarative twin: the range run must equal the
+    // union of one-date runs, each inside a single time chunk
+    val perDate = (1 until 4).map(t =>
+      GridFocal.focalTerrain(spark, tinyH, tinyRoot, t, t + 1))
+      .reduce(_ union _)
+    val ranged = GridFocal.focalTerrain(spark, tinyH, tinyRoot, 1, 4)
+    assert(ranged.count() > 0)
+    assertSame(ranged, perDate)
+  }
 }

@@ -230,4 +230,18 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.trainMerges(bare, nMerges = 3) == merges)
     assert(Bpe.vocab(bare, merges) == syms)
   }
+
+  test("shareTokens = true without the id column fails loudly, naming it") {
+    // a synthesized id could never seed the chain cache later stages
+    // key on, so sharing it would persist a corpus-sized frame for
+    // nothing
+    val bare = Seq("low low lower", "newest widest").toDF("text")
+    val e = intercept[IllegalArgumentException](
+      Bpe.trainMerges(bare, nMerges = 3, shareTokens = true))
+    assert(e.getMessage.contains("doc_id"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Bpe.trainMerges(bare.withColumn("doc_id", col("text")), nMerges = 3,
+        idCol = "page_id", shareTokens = true))
+    assert(e2.getMessage.contains("page_id"), e2.getMessage)
+  }
 }

@@ -443,4 +443,35 @@ class TensorShardsSpec extends AnyFunSuite {
       if ((i >= 24 && i < 29) || (i >= 50 && i < 52)) 1L else 0L))
     graft.ops.CacheRegistry.releaseAll()
   }
+
+  test("decodeTokenRows is total: a bin whose arrays disagree with its " +
+    "seg_lens fails, whatever columns the reader keeps") {
+    def bin(toks: Seq[Long], loss: Seq[Long], lens: Seq[Long]) =
+      Seq((Seq(7L), toks, loss, Seq(0L), lens))
+        .toDF("bin_id", "token_ids", "loss_mask", "seg_starts", "seg_lens")
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+    // well-formed: one segment covering all three tokens
+    assert(TensorShards.decodeTokenRows(
+      bin(Seq(1L, 2L, 3L), Seq(1L, 1L, 1L), Seq(3L))).count() == 3)
+    val cases = Seq(
+      // token_ids run past the segments: an unguarded decode drops the
+      // tail
+      bin(Seq(1L, 2L, 3L, 4L), Seq(1L, 1L, 1L, 1L), Seq(3L)),
+      // segments run past the token_ids
+      bin(Seq(1L, 2L), Seq(1L, 1L), Seq(3L)),
+      // loss_mask shorter than token_ids
+      bin(Seq(1L, 2L, 3L), Seq(1L, 1L), Seq(3L)))
+    cases.foreach { ex =>
+      val decoded = TensorShards.decodeTokenRows(ex)
+      Seq[() => Any](
+        () => decoded.collect(),
+        () => decoded.select("token_id").collect(),
+        () => decoded.count()).foreach { action =>
+        val e = intercept[Exception](action())
+        assert(messages(e).contains("tensor bin 7"), messages(e))
+      }
+    }
+  }
 }
